@@ -362,6 +362,12 @@ def integrity_violations(
                     dfmt = p[1].decode()
                     dw, dh = int(p[2]), int(p[3])
                     seed, amp = int(p[4]), int(p[5])
+                    # the noise span 2·amp+1 must fit a byte: outside
+                    # [0, 127] the C kernel and the numpy path (uint8
+                    # span) disagree, so the verdict would depend on
+                    # whether the kernel compiled
+                    if not 0 <= amp <= 127:
+                        raise ValueError(f"amp {amp} outside [0, 127]")
                 except Exception as e:  # noqa: BLE001
                     out.append(
                         (int(parts[i]), iid, "bytes",

@@ -16,7 +16,11 @@ table's partition spec."""
 
 from __future__ import annotations
 
+import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -102,6 +106,97 @@ class ValidationReport:
     drift_results: dict[str, DataFrame] = field(default_factory=dict)
 
 
+@dataclass(frozen=True)
+class _Inputs:
+    """The run_validation arguments a check builder reads."""
+
+    images: DataFrame
+    part: Column
+    entries: DataFrame | None
+    ref_keys: DataFrame | None
+    exp_cap: Column
+    pixel_sample: int | None
+    match_strategy: str
+
+
+def _sanctioned(c: _Inputs) -> DataFrame | None:
+    if c.entries is None:
+        return None
+    strategy = c.match_strategy
+    if strategy == "auto":
+        # one count() job on the (small) dimension table; the rule
+        # itself is resolve_match_strategy — kept pure and
+        # pytest-pinned at both dimension scales
+        strategy = resolve_match_strategy(c.entries.count())
+    matcher = match_captions_arrow if strategy == "arrow" else match_captions
+    # a sanctioned caption is a violation row (the reference's
+    # {matched: 1} verdict, re-framed as a constraint failure); the
+    # logical partition derives from image_id alone, so no join back to
+    # the table is needed
+    return matcher(c.images, c.entries).select(
+        F.lit("sanctioned").alias("check"),
+        c.part.cast("int").alias("partition_id"),
+        F.col("image_id").cast("string"),
+        F.lit("caption").alias("column"),
+        F.concat(F.lit("matched "), "matched_name", F.lit(" on "), "list")
+        .alias("detail"),
+    ).to(VIOLATION_SCHEMA)
+
+
+# the non-drift checks: name → VIOLATION_SCHEMA plan (None when the
+# check's input was not given). Registry order is the union order.
+_BUILDERS: dict[str, Callable[[_Inputs], DataFrame | None]] = {
+    "schema": lambda c: schema_violations(c.images, c.part),
+    "unique_image_id": lambda c: uniqueness_violations(
+        c.images, "image_id", partition_expr=c.part
+    ),
+    "unique_phash": lambda c: uniqueness_violations(
+        c.images, "phash", partition_expr=c.part
+    ),
+    "referential": lambda c: None if c.ref_keys is None else referential_violations(
+        c.images, caption_key_expr(), c.ref_keys, partition_expr=c.part
+    ),
+    "integrity": lambda c: integrity_violations(
+        c.images, c.part, c.exp_cap, pixel_sample=c.pixel_sample
+    ),
+    "sanctioned": _sanctioned,
+}
+
+# the drift checks read the cube, not the table:
+# (check name, column, test kind, drift_results key)
+_DRIFT = (
+    ("drift_w", "w", "ks", "w"),
+    ("drift_h", "h", "ks", "h"),
+    ("drift_fmt", "fmt", "chi2", "fmt"),
+    (PSI_CHECK, "fmt", "psi", "fmt_psi"),
+)
+
+
+def _materialize(name: str, df: DataFrame, path: str | None = None) -> DataFrame:
+    """Run ``df`` as ONE Spark job named ``name``: an eager
+    localCheckpoint, or — with ``path`` — a parquet write read back
+    under the same schema. run_validation starts every job through
+    here, from its one thread pool — apart from the dimension count()
+    behind ``match_strategy="auto"``."""
+    sc = df.sparkSession.sparkContext
+    # spark.scheduler.mode=FAIR schedules fairly BETWEEN pools, and the
+    # pool is chosen by a thread-local property — without this, every
+    # job lands in the single "default" pool whose internal order is
+    # FIFO, and the light checks' small stages queue behind the long
+    # mapInPandas stages. Pools are auto-created on first use; no
+    # allocation file needed.
+    sc.setLocalProperty("spark.scheduler.pool", name)
+    sc.setJobDescription(name)
+    if path is None:
+        # eager localCheckpoint, not .cache(): a cache entry would
+        # outlive the report in the session CacheManager (repeated
+        # run_validation calls leak), while checkpoint blocks are
+        # reclaimed when the report's plans are garbage-collected
+        return df.localCheckpoint(eager=True)
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
 def run_validation(
     images: DataFrame,
     entries: DataFrame | None = None,
@@ -139,249 +234,97 @@ def run_validation(
     relational logic without an Arrow hop; the two paths are
     output-identical by pinned contract.
 
-    ``concurrent`` (default): each check materializes as its OWN Spark
-    job from a driver thread pool (eager localCheckpoint), then the
-    union reads the checkpointed blocks. A single union-of-9-branches
+    ``concurrent`` (default): the cube, each check, the fused drift
+    piece, the stats and the sink writes each run as their OWN Spark
+    job (:func:`_materialize`) from one driver thread pool, then the
+    union reads the materialized pieces. A single union-of-9-branches
     job executes its AQE query stages largely sequentially, so suite
     wall time degenerates to the SUM of branch latencies; concurrent
-    jobs share the task slots and bring it down to ~max(branch). Same
-    results by construction — only job boundaries change."""
+    jobs share the task slots and bring it down to ~max(branch).
+    ``concurrent=False`` is the same path with one pool worker: the
+    same jobs, one after another. Same results either way — only job
+    overlap changes."""
     part = partition_expr if partition_expr is not None else logical_partition("image_id")
-    exp_cap = (
-        expected_caption_expr
-        if expected_caption_expr is not None
-        else expected_caption("image_id")
-    )
+    if expected_caption_expr is None:
+        expected_caption_expr = expected_caption("image_id")
+    inputs = _Inputs(images, part, entries, ref_keys, expected_caption_expr,
+                     pixel_sample, match_strategy)
     spark = images.sparkSession
-
-    pieces: list[DataFrame] = []
-    piece_names: list[str] = []
     drift_results: dict[str, DataFrame] = {}
+    # one worker per job that can be in flight: cube, checks, drift, stats
+    ex = ThreadPoolExecutor(max_workers=len(_BUILDERS) + 3 if concurrent else 1)
 
-    def _add(name: str, df: DataFrame) -> None:
-        piece_names.append(name)
-        pieces.append(df)
+    def submit(name: str, df: DataFrame, sink: bool = False):
+        path = os.path.join(sink_dir, f"{name}.parquet") if sink else None
+        return ex.submit(_materialize, name, df, path)
 
-    # ONE scan builds the (partition, w, h, fmt) data cube; the three
-    # drift histograms AND the per-partition row counts all derive from
-    # it without touching the table again (w/h/fmt are low-cardinality,
-    # so the cube is tiny: |parts| × |w| × |h| × |fmt| rows). Eager
-    # localCheckpoint, not .cache(): a cache entry would outlive the
-    # report in the session CacheManager (repeated run_validation calls
-    # leak), while checkpoint blocks are reclaimed when the report's
-    # plans are garbage-collected — and every consumer needs the cube
-    # materialized anyway.
-    import os as _os
-    import sys as _sys
-    import time as _time
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    _timing = _os.environ.get("PDVS_RUNNER_TIMING") == "1"
-    _t0 = _time.time()
-    _cube_plan = images.groupBy(
-        part.cast("int").alias("partition_id"), "w", "h", "fmt"
-    ).agg(F.count(F.lit(1)).alias("n"))
-    # materialize the cube in a background thread so its scan job
-    # overlaps the (driver-side) plan construction of the non-drift
-    # checks below; the future is joined before anything consumes it.
-    # The executor is shut down in the finally below — an exception
-    # while building checks must not leak the thread / background job.
-    def _in_pool(name: str, fn):
-        # spark.scheduler.mode=FAIR schedules fairly BETWEEN pools, and
-        # the pool is chosen by a thread-local property — without this,
-        # every job lands in the single "default" pool whose internal
-        # order is FIFO and FAIR mode changes nothing (ADVICE r4).
-        # Pools are auto-created on first use; no allocation file needed.
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", name)
-        return fn()
-
-    _cube_ex = _TPE(max_workers=1)
-    _cube_fut = _cube_ex.submit(
-        _in_pool, "cube", lambda: _cube_plan.localCheckpoint(eager=True)
-    )
     try:
+        # ONE scan builds the (partition, w, h, fmt) data cube; the
+        # drift histograms AND the per-partition row counts all derive
+        # from it without touching the table again (w/h/fmt are
+        # low-cardinality, so the cube is tiny). Its job starts first,
+        # so it overlaps the driver-side plan construction below.
+        cube_fut = submit("cube", images.groupBy(
+            part.cast("int").alias("partition_id"), "w", "h", "fmt"
+        ).agg(F.count(F.lit(1)).alias("n")))
+        futures = []
+        for name, build in _BUILDERS.items():
+            df = build(inputs) if name in checks else None
+            if df is not None:
+                futures.append(submit(name, df))
+        # the one-pass column stats are an independent scan the caller
+        # reads anyway, so the job overlaps the checks
+        stats_fut = submit("stats", column_stats(images)) if with_stats else None
 
-        def _cube() -> DataFrame:
-            out = _cube_fut.result()
-            if _timing and not getattr(_cube_fut, "_pdvs_logged", False):
-                _cube_fut._pdvs_logged = True
-                print(f"[runner] cube            {_time.time() - _t0:7.2f}s",
-                      file=_sys.stderr)
-            return out
-
-        if "schema" in checks:
-            _add("schema", schema_violations(images, part))
-        if "unique_image_id" in checks:
-            _add(
-                "unique_image_id",
-                uniqueness_violations(images, "image_id", partition_expr=part),
-            )
-        if "unique_phash" in checks:
-            _add(
-                "unique_phash",
-                uniqueness_violations(images, "phash", partition_expr=part),
-            )
-        if "referential" in checks and ref_keys is not None:
-            _add(
-                "referential",
-                referential_violations(
-                    images, caption_key_expr(), ref_keys, partition_expr=part
-                ),
-            )
-        if "integrity" in checks:
-            _add(
-                "integrity",
-                integrity_violations(
-                    images, part, exp_cap, pixel_sample=pixel_sample
-                ),
-            )
-        if "sanctioned" in checks and entries is not None:
-            strategy = match_strategy
-            if strategy == "auto":
-                # one count() job on the (small) dimension table; the
-                # rule itself is resolve_match_strategy — kept pure and
-                # pytest-pinned at both dimension scales
-                strategy = resolve_match_strategy(entries.count())
-            matcher = (
-                match_captions_arrow if strategy == "arrow" else match_captions
-            )
-            matches = matcher(images, entries)
-            # a sanctioned caption is a violation row (the reference's
-            # {matched: 1} verdict, re-framed as a constraint failure);
-            # the logical partition derives from image_id alone, so no
-            # join back to the table is needed
-            _add(
-                "sanctioned",
-                matches.select(
-                    F.lit("sanctioned").alias("check"),
-                    part.cast("int").alias("partition_id"),
-                    F.col("image_id").cast("string"),
-                    F.lit("caption").alias("column"),
-                    F.concat(
-                        F.lit("matched "), F.col("matched_name"),
-                        F.lit(" on "), F.col("list"),
-                    ).alias("detail"),
-                )
-                .to(VIOLATION_SCHEMA)
-            )
-
-        # drift branches come LAST: they are the only plans that need the
-        # materialized cube, so building every other check's plan first
-        # maximizes the overlap with the cube job running in _cube_ex. The
-        # three branches are tiny (cube-derived histograms) and fuse into
-        # ONE piece/job — three separate jobs each paid driver latency; the
-        # `check` column still distinguishes drift_w/h/fmt in the rollup.
-        drift_pieces: list[DataFrame] = []
-        for col, kind, name in (
-            ("w", "ks", "drift_w"),
-            ("h", "ks", "drift_h"),
-            ("fmt", "chi2", "drift_fmt"),
-            ("fmt", "psi", PSI_CHECK),
-        ):
+        # drift comes LAST: its plans need the materialized cube. The
+        # branches are tiny (cube-derived histograms) and fuse into ONE
+        # job — separate jobs each paid driver latency; the `check`
+        # column still tells drift_w/h/fmt apart in the rollup.
+        cube = cube_fut.result()
+        drift_pieces = []
+        for name, col, kind, key in _DRIFT:
             if name in checks:
-                hist = (
-                    _cube().filter(F.col(col).isNotNull())
-                    .groupBy("partition_id", F.col(col).alias("value"))
-                    .agg(F.sum("n").alias("n"))
-                )
-                res = drift_from_hist(hist, col, kind=kind)
-                drift_results[col if kind != "psi" else f"{col}_psi"] = res
-                drift_pieces.append(drift_violations(res))
+                hist = cube.filter(F.col(col).isNotNull()).groupBy(
+                    "partition_id", F.col(col).alias("value")
+                ).agg(F.sum("n").alias("n"))
+                drift_results[key] = drift_from_hist(hist, col, kind=kind)
+                drift_pieces.append(drift_violations(drift_results[key]))
         if drift_pieces:
-            fused = drift_pieces[0]
-            for p in drift_pieces[1:]:
-                fused = fused.unionByName(p)
-            _add("drift(fused)", fused)
+            fused = reduce(DataFrame.unionByName, drift_pieces)
+            futures.append(submit("drift(fused)", fused))
 
-        if concurrent and len(pieces) > 1:
-            import os
-            import sys
-            import time
-            from concurrent.futures import ThreadPoolExecutor
-
-            timing = os.environ.get("PDVS_RUNNER_TIMING") == "1"
-            # (the shared cube is already materialized — the _cube() future
-            # is joined by the drift branches before the pool starts —
-            # so concurrent drift branches can't race to compute it)
-
-            def _mat(arg: tuple[str, DataFrame]) -> DataFrame:
-                name, df = arg
-                t = time.time()
-                # one scheduler pool per check: FAIR mode shares slots
-                # between POOLS, so the light checks' small stages
-                # interleave with the long mapInPandas stages instead of
-                # queuing behind them in the one FIFO default pool
-                out = _in_pool(name, lambda: df.localCheckpoint(eager=True))
-                if timing:
-                    print(f"[runner] {name:16s} {time.time() - t:7.2f}s",
-                          file=sys.stderr)
-                return out
-
-            # PDVS_RUNNER_POOL caps how many checks materialize at once
-            # (default: all). Fewer concurrent jobs = less task-set
-            # interleaving between bandwidth-heavy (integrity) and cache-
-            # sensitive (join/agg) stages on one shared memory bus.
-            pool = int(os.environ.get("PDVS_RUNNER_POOL", "0")) or len(pieces)
-            # the one-pass column stats ride the same pool: it's an
-            # independent scan the caller will collect anyway, so its job
-            # overlaps the check jobs instead of running serially after them
-            jobs = list(zip(piece_names, pieces))
-            if with_stats:
-                jobs.append(("stats", column_stats(images)))
-            _tp = time.time()
-            with ThreadPoolExecutor(max_workers=pool + (1 if with_stats else 0)) as ex:
-                results = list(ex.map(_mat, jobs))
-            if timing:
-                print(f"[runner] pool_total      {time.time() - _tp:7.2f}s",
-                      file=sys.stderr)
-            stats_df = results.pop() if with_stats else None
-            pieces = results
-        else:
-            stats_df = column_stats(images) if with_stats else None
-        _tu = _time.time()
+        pieces = [f.result() for f in futures]
+        stats_df = stats_fut.result() if stats_fut is not None else None
         if pieces:
-            violations = pieces[0]
-            for p in pieces[1:]:
-                violations = violations.unionByName(p)
-            # the union of ~10 checkpointed pieces carries the SUM of
+            # the union of the materialized pieces carries the SUM of
             # their partition counts (~300 at 32 cores) — every
-            # downstream consumer (two rollups + the caller's reads,
-            # or the sink write) would launch that many near-empty
-            # tasks, and the sink would land that many tiny files.
-            # A narrow coalesce to the session's parallelism bounds
-            # task count and output file count without a shuffle
-            # (violation rows are a tiny fraction of the input by
-            # construction; ordering is irrelevant to the rollups).
-            # (coalesce to a LARGER count is a no-op, so this never
-            # reduces parallelism below the session's)
-            violations = violations.coalesce(
+            # downstream consumer (two rollups + the caller's reads, or
+            # the sink write) would launch that many near-empty tasks,
+            # and the sink would land that many tiny files. The pieces
+            # are checkpointed, so this narrow coalesce to the session's
+            # parallelism cannot reach back into a check's own stages;
+            # it bounds task and file count without a shuffle (violation
+            # rows are a tiny fraction of the input; ordering is
+            # irrelevant to the rollups).
+            violations = reduce(DataFrame.unionByName, pieces).coalesce(
                 spark.sparkContext.defaultParallelism
             )
         else:
             violations = spark.createDataFrame([], VIOLATION_SCHEMA)
-        if _timing:
-            print(f"[runner] union_built     {_time.time() - _tu:7.2f}s",
-                  file=_sys.stderr)
         if sink_dir is not None:
-            # production sink: violations land in a parquet table and every
-            # downstream rollup scans the table — no driver-held blocks
-            import os as _os
-
-            viol_path = _os.path.join(sink_dir, "violations.parquet")
-            violations.write.mode("overwrite").parquet(viol_path)
-            violations = spark.read.schema(VIOLATION_SCHEMA).parquet(viol_path)
+            # production sink: violations land in a parquet table and
+            # every downstream rollup scans the table — no driver-held
+            # blocks
+            violations = submit("violations", violations, sink=True).result()
         else:
-            # lazy localCheckpoint (materializes at the first action, reused
-            # by the rollup, summary and caller reads): unlike .cache() the
-            # blocks are reclaimed when the report is garbage-collected, so
-            # a consumer that never calls unpersist() — the CLI, a notebook
-            # loop — cannot leak executor storage across run_validation calls
+            # lazy localCheckpoint (materializes at the first action,
+            # reused by the rollup, summary and caller reads): like the
+            # pieces' checkpoints, its blocks die with the report, so a
+            # consumer that never calls unpersist() — the CLI, a
+            # notebook loop — cannot leak executor storage
             violations = violations.localCheckpoint(eager=False)
 
-        _tr = _time.time()
-        rows_per_part = _cube().groupBy("partition_id").agg(
-            F.sum("n").alias("n_rows")
-        )
+        rows_per_part = cube.groupBy("partition_id").agg(F.sum("n").alias("n_rows"))
         fails_per_part = violations.groupBy("partition_id").agg(
             F.count(F.lit(1)).alias("n_violations"),
             F.count_distinct(
@@ -400,48 +343,24 @@ def run_validation(
             .agg(F.count(F.lit(1)).alias("n_violations"))
             .orderBy("check")
         )
-        if _timing:
-            print(f"[runner] rollup_built    {_time.time() - _tr:7.2f}s",
-                  file=_sys.stderr)
         if sink_dir is not None:
-            # the two rollups are tiny independent jobs over the already-
-            # written violations table — write them concurrently
-            def _write(arg: tuple[str, DataFrame]) -> None:
-                name, df = arg
-                _in_pool(
-                    name,
-                    lambda: df.write.mode("overwrite").parquet(
-                        _os.path.join(sink_dir, f"{name}.parquet")
-                    ),
-                )
-
-            rollups = [
-                ("partition_verdicts", partition_verdicts),
-                ("check_summary", check_summary),
-            ]
+            # the rollups (and, by the north rule, the per-column
+            # metrics) are tiny independent jobs over the written
+            # violations table — write them concurrently
+            sunk = {
+                name: submit(name, df, sink=True)
+                for name, df in (("partition_verdicts", partition_verdicts),
+                                 ("check_summary", check_summary),
+                                 ("stats", stats_df))
+                if df is not None
+            }
+            partition_verdicts = sunk["partition_verdicts"].result()
+            partition_verdicts = partition_verdicts.orderBy("partition_id")
+            check_summary = sunk["check_summary"].result().orderBy("check")
             if stats_df is not None:
-                # the north rule sinks METRICS alongside verdicts:
-                # the per-column stats land as a table too, and the
-                # report reads them back like every other artifact
-                rollups.append(("stats", stats_df))
-            with _TPE(max_workers=len(rollups)) as _wex:
-                list(_wex.map(_write, rollups))
-            partition_verdicts = spark.read.parquet(
-                _os.path.join(sink_dir, "partition_verdicts.parquet")
-            ).orderBy("partition_id")
-            check_summary = spark.read.parquet(
-                _os.path.join(sink_dir, "check_summary.parquet")
-            ).orderBy("check")
-            if stats_df is not None:
-                stats_df = spark.read.parquet(
-                    _os.path.join(sink_dir, "stats.parquet")
-                )
+                stats_df = sunk["stats"].result()
     finally:
-        _cube_ex.shutdown(wait=False)
+        ex.shutdown(wait=False, cancel_futures=True)
     return ValidationReport(
-        violations=violations,
-        partition_verdicts=partition_verdicts,
-        check_summary=check_summary,
-        stats=stats_df,
-        drift_results=drift_results,
+        violations, partition_verdicts, check_summary, stats_df, drift_results
     )

@@ -192,26 +192,43 @@ def test_integrity_sampled_mode_matches_exact(spark, images):
     assert sorted(map(key, exact)) == sorted(map(key, sampled))
 
 
-def test_integrity_flags_midband_lossy(spark):
+def test_integrity_flags_midband_lossy(spark, monkeypatch):
     """A lossy payload with PSNR in (30, 40) dB decodes fine but must be
-    rejected by the 40 dB gate — and pass a 30 dB gate."""
+    rejected by the 40 dB gate — and pass a 30 dB gate. Header amps
+    outside [0, 127] are undecodable payloads, with the same rows
+    whether the compiled MSE kernel runs or the numpy path does."""
     iid = "img-midband-000001"
     seed = codec.ref_seed_py(iid)
-    payload = f"PDVS1|jpeg|16|12|{seed}|{codec.MIDBAND_NOISE_AMP}".encode()
+    amps = {iid: codec.MIDBAND_NOISE_AMP, "img-amp-neg1": -1,
+            "img-amp-128": 128, "img-amp-255": 255, "img-amp-1e6": 10**6}
     df = spark.createDataFrame(
-        [(iid, bytearray(payload), 16, 12, "jpeg", "a photo", 1)],
+        [
+            (i, bytearray(f"PDVS1|jpeg|16|12|{seed}|{amp}".encode()),
+             16, 12, "jpeg", "a photo", 1)
+            for i, amp in amps.items()
+        ],
         "image_id string, bytes binary, w int, h int, fmt string, "
         "caption string, phash long",
     )
-    v40 = integrity_violations(
-        df, logical_partition("image_id"), F.lit("a photo")
-    ).collect()
-    assert len(v40) == 1 and "psnr" in v40[0]["detail"]
-    v30 = integrity_violations(
-        df, logical_partition("image_id"), F.lit("a photo"),
-        psnr_threshold=30.0,
-    ).collect()
-    assert v30 == []
+
+    def violations(**kw):
+        return {
+            r["image_id"]: r["detail"]
+            for r in integrity_violations(
+                df, logical_partition("image_id"), F.lit("a photo"), **kw
+            ).collect()
+        }
+
+    bad_amp = {i: f"undecodable payload: amp {a} outside [0, 127]"
+               for i, a in amps.items() if i != iid}
+    v40, v30 = violations(), violations(psnr_threshold=30.0)
+    assert "psnr" in v40[iid] and v40 == {iid: v40[iid], **bad_amp}
+    assert v30 == bad_amp
+    # the Python workers take their environment from the context's
+    # executor environment, so this turns the C kernel off inside them
+    monkeypatch.setitem(spark.sparkContext.environment, "PDVS_MSE_C", "0")
+    assert violations() == v40
+    assert violations(psnr_threshold=30.0) == v30
 
 
 def test_schema_violations_clean_and_dirty(spark, images):

@@ -151,37 +151,31 @@ def test_incremental_merge_semantics(spark):
 def test_validation_report_parquet_sink(spark, images, ref_dims, tmp_path):
     """sink_dir writes violations/verdicts/summary to parquet tables and
     the returned report reads from them — same verdicts as the
-    collect-path report (the 10^12-row artifact shape)."""
+    collect-path report (the 10^12-row artifact shape). The serial
+    in-memory pass (concurrent=False) agrees with both, row for row."""
     import os
 
     entries, ref_keys = ref_dims
     base = run_validation(images, entries=entries, ref_keys=ref_keys)
     sunk = run_validation(images, entries=entries, ref_keys=ref_keys,
                           sink_dir=str(tmp_path))
-    for name in ("violations", "partition_verdicts", "check_summary",
-                 "stats"):
+    serial = run_validation(images, entries=entries, ref_keys=ref_keys,
+                            concurrent=False)
+    names = ("violations", "partition_verdicts", "check_summary", "stats")
+    for name in names:
         assert os.path.isdir(str(tmp_path / f"{name}.parquet")), name
-    # the metrics table is sunk too and reads back value-identical
-    skey = lambda r: tuple(  # noqa: E731
-        sorted((k, str(v)) for k, v in r.asDict().items())
+    # every artifact — violations, verdicts, summary and the sunk
+    # metrics table — reads back value-identical in all three passes
+    rows = lambda df: sorted(  # noqa: E731
+        tuple(sorted((k, str(v)) for k, v in r.asDict().items()))
+        for r in df.collect()
     )
-    assert sorted(map(skey, sunk.stats.collect())) == sorted(
-        map(skey, base.stats.collect())
-    )
-    key = lambda r: (r["partition_id"], r["n_rows"], r["n_violations"],  # noqa: E731
-                     r["n_fail_rows"], r["passed"])
-    assert sorted(map(key, sunk.partition_verdicts.collect())) == sorted(
-        map(key, base.partition_verdicts.collect())
-    )
-    assert sorted(
-        (r["check"], r["n_violations"])
-        for r in sunk.check_summary.collect()
-    ) == sorted(
-        (r["check"], r["n_violations"])
-        for r in base.check_summary.collect()
-    )
+    for name in names:
+        want = rows(getattr(base, name))
+        assert rows(getattr(sunk, name)) == want, name
+        assert rows(getattr(serial, name)) == want, name
+    assert base.violations.count() > 0
     assert sunk.violations.schema == VIOLATION_SCHEMA
-    assert sunk.violations.count() == base.violations.count()
 
 
 def test_resolve_match_strategy_rule():
