@@ -11,11 +11,16 @@ shape, Spark underneath.
     v.update_data(new_entries_df)   # merge/diff semantics (U1)
     v.last_updated(); v.data(); v.export_data(path)
 
-Single-probe queries run the same distributed cascade on a one-row
-probe DataFrame — semantics identical to the bulk path by construction
-(one code path). The entries dimension is loaded lazily and cached,
-mirroring the reference's throttled ``_load_data`` (Sanctions.pm:29,
-321-352): reload only when the snapshot path mtime advances.
+Single-probe queries run the bulk path's cascade (one code path, so
+semantics are identical by construction) through a
+:class:`~.operators.matcher.Matcher` built once per loaded dimension —
+the analog of the reference's ``_index``, rebuilt by ``_load_data``
+(Sanctions.pm:321-352). Each probe then only wires its one-row probe
+table onto the prebuilt expressions and runs one short query. The
+entries dimension is loaded lazily and cached, mirroring the
+reference's throttled ``_load_data`` (Sanctions.pm:29): reload only when
+the snapshot path mtime advances. Explicit ``entries`` without an
+explicit ``sanction_path`` are never replaced by ``$SANCTION_FILE``.
 """
 
 from __future__ import annotations
@@ -26,7 +31,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .operators.matcher import match_probes
+from .operators.matcher import Matcher
 from .schema import ENTRY_SCHEMA, PROBE_SCHEMA
 from .sources.synth import synth_entries
 
@@ -41,8 +46,13 @@ class SanctionsValidator:
         entries: DataFrame | None = None,
     ):
         self.spark = spark
-        self.sanction_path = sanction_path or os.environ.get("SANCTION_FILE")
+        if not sanction_path and entries is None:
+            sanction_path = os.environ.get("SANCTION_FILE")
+        self.sanction_path = sanction_path
         self._entries = entries
+        # (entries, Matcher built from them): rebuilt on the first query
+        # after _load_data swaps _entries, never in __init__
+        self._matcher: tuple[DataFrame, Matcher] | None = None
         self._state: DataFrame | None = None
         self._last_load = 0.0
         self._last_mtime = 0.0
@@ -69,6 +79,12 @@ class SanctionsValidator:
 
     def data(self) -> DataFrame:
         return self._load_data()
+
+    def _probe_matcher(self) -> Matcher:
+        entries = self._load_data()
+        if self._matcher is None or self._matcher[0] is not entries:
+            self._matcher = (entries, Matcher(entries))
+        return self._matcher[1]
 
     # --- state persistence (the Redis.pm per-source {updated, verified,
     #     error} hashes, kept as a tiny parquet beside the snapshot) ---
@@ -274,9 +290,10 @@ class SanctionsValidator:
 
     # --- queries (Sanctions.pm:124-126, 217-319) ---
 
-    def get_sanctioned_info(self, *args: Any, **kwargs: Any) -> dict:
-        """Positional (first, last, dob) or keyword args per the
-        reference's two calling conventions."""
+    def _verdict_query(self, *args: Any, **kwargs: Any) -> DataFrame:
+        """The one-row probe's ``verdict`` query: only the ``best`` half
+        of the dimension's cached :class:`Matcher` (no join back to the
+        probe table), so it has a row only for a hit."""
         fields = {f: None for f in PROBE_SCHEMA.fieldNames()}
         fields["probe_id"] = "probe"
         if args:
@@ -289,21 +306,28 @@ class SanctionsValidator:
         probe = self.spark.createDataFrame(
             [tuple(fields[f] for f in PROBE_SCHEMA.fieldNames())], PROBE_SCHEMA
         )
-        row = (
-            match_probes(probe, self._load_data())
-            .select("verdict")
-            .collect()[0]["verdict"]
-        )
-        out = {"matched": row["matched"]}
-        if row["matched"]:
-            out["list"] = row["list"]
-            out["comment"] = row["comment"]
-            out["matched_args"] = {
+        return self._probe_matcher().best(probe).select("__best.verdict")
+
+    def get_sanctioned_info(self, *args: Any, **kwargs: Any) -> dict:
+        """Positional (first, last, dob) or keyword args per the
+        reference's two calling conventions. The probe runs one short
+        query on the :class:`Matcher` built once per loaded dimension
+        (rebuilt only when ``_load_data`` swaps the entries); no verdict
+        row means no candidate survived: ``{"matched": 0}``."""
+        rows = self._verdict_query(*args, **kwargs).collect()
+        if not rows:
+            return {"matched": 0}
+        row = rows[0]["verdict"]
+        return {
+            "matched": row["matched"],
+            "list": row["list"],
+            "comment": row["comment"],
+            "matched_args": {
                 k: v
                 for k, v in row["matched_args"].asDict().items()
                 if v is not None
-            }
-        return out
+            },
+        }
 
     def is_sanctioned(self, *args: Any, **kwargs: Any) -> int:
         return self.get_sanctioned_info(*args, **kwargs)["matched"]

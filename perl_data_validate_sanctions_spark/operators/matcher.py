@@ -31,7 +31,20 @@ candidates and keep the minimum of (tier, source, name, entry_id) —
 direct-DOB tiers always beat the dob_text fallback tier, matching the
 reference's two-pass structure.
 
-Scale shape: the only shuffle is the final ``groupBy(probe_id)`` over
+Physical shape: :class:`Matcher` builds everything that does not depend
+on a probe's values once per entries dimension — the lazy broadcast
+token index and every probe-side and per-candidate Column. A query
+selects the probe columns in one projection, explodes the probe tokens
+into the broadcast hash join, filters ``candidate_ok`` and reduces
+``groupBy(__pid).agg(min(ranked))`` — ``Matcher.best``. The bulk
+``match_probes`` is ``Matcher.match``: ``probes ⟕ best``, misses
+coalesced, so it adds one join back to the probe table. A single probe
+(``SanctionsValidator.get_sanctioned_info``) runs ``best`` alone: no
+best row already means the miss verdict, so it skips that join and the
+probe-table exchange and ``best`` broadcast it costs (3 jobs per probe
+instead of 5).
+
+Scale shape: the candidate shuffle is the ``groupBy(__pid)`` over
 candidate-bearing rows — for a 10^12-row caption table where ~2% of
 captions share any token with the dimension, that shuffle carries ~2%
 of rows with a handful of small columns. ``bytes`` is never selected
@@ -196,6 +209,109 @@ def _miss_verdict() -> Column:
     )
 
 
+_COUNTRY_FIELDS = ("place_of_birth", "residence", "nationality", "citizen")
+
+
+def _probe_field(f: str) -> Column:
+    """Probe-side value of an optional field. Country fields are
+    normalized (Sanctions.pm:235-240): unknown countries become '' which
+    the field check then ignores (falsy in Perl) — NOT a mismatch."""
+    if f in _COUNTRY_FIELDS:
+        return F.when(
+            F.col(f).isNotNull() & (F.col(f) != ""), country_code(F.col(f))
+        )
+    return F.col(f)
+
+
+class Matcher:
+    """The probe-independent half of ``match_probes``, built once per
+    entries dimension — the analog of the reference's ``_index``, built
+    once per ``_load_data`` and then only queried (Sanctions.pm:321-352).
+
+    None of the cascade's expressions depend on a probe's values (they
+    travel as data in the probe rows), so the constructor builds the
+    lazy broadcast token index and every probe-side and per-candidate
+    Column once; a query then only wires them onto its probe table.
+    Nothing is materialized: every query re-executes the index from
+    ``entries``, so a Matcher is exactly as fresh as the DataFrame it
+    was built from, and a swapped dimension needs a new Matcher."""
+
+    def __init__(self, entries: DataFrame):
+        self._index = F.broadcast(build_token_index(build_name_dim(entries)))
+
+        full_name = process_name(
+            F.col("first_name"), F.coalesce(F.col("last_name"), F.lit(""))
+        )
+        p_cols = {f: "__p_" + f for f in OPTIONAL_MATCH_FIELDS}
+        self._prepared = [
+            clean_name_tokens(full_name).alias("__ptokens"),
+            clean_full_name(full_name).alias("__pfull"),
+            F.col("date_of_birth").isNotNull().alias("__dob_provided"),
+            date_to_epoch(F.col("date_of_birth")).alias("__pepoch"),
+            *[_probe_field(f).alias(c) for f, c in p_cols.items()],
+        ]
+        self._exploded = [
+            "__ptokens",
+            "__pfull",
+            "__dob_provided",
+            "__pepoch",
+            epoch_year(F.col("__pepoch")).alias("__pyear"),
+            *p_cols.values(),
+            F.explode("__ptokens").alias("__token"),
+        ]
+
+        preds = _candidate_predicates(
+            F.col("__ptokens"),
+            F.col("__pfull"),
+            F.col("__dob_provided"),
+            F.col("__pepoch"),
+            F.col("__pyear"),
+            {f: F.col(c) for f, c in p_cols.items()},
+        )
+        verdict = F.struct(
+            F.lit(1).alias("matched"),
+            _e("source").alias("list"),
+            preds["matched_args"].alias("matched_args"),
+            preds["comment"].alias("comment"),
+        )
+        ranked = F.struct(
+            preds["tier"].alias("tier"),
+            _e("source").alias("source"),
+            _e("name").alias("name"),
+            _e("entry_id").alias("entry_id"),
+            verdict.alias("verdict"),
+        )
+        self._candidate_ok = preds["candidate_ok"]
+        self._best = F.min(ranked).alias("__best")
+        self._verdict = F.coalesce(F.col("__best.verdict"), _miss_verdict())
+
+    def best(
+        self, probes: DataFrame, probe_id_col: str = "probe_id"
+    ) -> DataFrame:
+        """``(__pid, __best)`` for the probes with a surviving candidate;
+        ``__best.verdict`` is the J7 verdict. A probe with no row here
+        gets the miss verdict."""
+        return (
+            probes.select(F.col(probe_id_col).alias("__pid"), *self._prepared)
+            .select("__pid", *self._exploded)
+            .join(self._index, "__token")
+            .filter(self._candidate_ok)
+            .groupBy("__pid")
+            .agg(self._best)
+        )
+
+    def match(
+        self, probes: DataFrame, probe_id_col: str = "probe_id"
+    ) -> DataFrame:
+        """The probe table plus a ``verdict`` struct column
+        (VERDICT_SCHEMA): ``probes ⟕ best``, misses coalesced."""
+        best = self.best(probes, probe_id_col)
+        out = probes.join(
+            best, probes[probe_id_col] == best["__pid"], "left"
+        ).withColumn("verdict", self._verdict)
+        return out.drop("__pid", "__best")
+
+
 def match_probes(
     probes: DataFrame,
     entries: DataFrame,
@@ -203,79 +319,7 @@ def match_probes(
 ) -> DataFrame:
     """Full ``get_sanctioned_info`` over a probe table: returns the probe
     table plus a ``verdict`` struct column (VERDICT_SCHEMA)."""
-    token_index = F.broadcast(build_token_index(build_name_dim(entries)))
-
-    full_name = process_name(
-        F.col("first_name"), F.coalesce(F.col("last_name"), F.lit(""))
-    )
-    pepoch = date_to_epoch(F.col("date_of_birth"))
-    prepared = (
-        probes.withColumn("__ptokens", clean_name_tokens(full_name))
-        .withColumn("__pfull", clean_full_name(full_name))
-        .withColumn("__dob_provided", F.col("date_of_birth").isNotNull())
-        .withColumn("__pepoch", pepoch)
-        .withColumn("__pyear", epoch_year(pepoch))
-    )
-    # probe-side country normalization (Sanctions.pm:235-240): unknown
-    # countries become '' which the field check then ignores (falsy in
-    # Perl) — NOT a mismatch.
-    probe_fields: dict[str, Column] = {}
-    for f in OPTIONAL_MATCH_FIELDS:
-        if f in ("place_of_birth", "residence", "nationality", "citizen"):
-            prepared = prepared.withColumn(
-                "__p_" + f,
-                F.when(
-                    F.col(f).isNotNull() & (F.col(f) != ""), country_code(F.col(f))
-                ),
-            )
-        else:
-            prepared = prepared.withColumn("__p_" + f, F.col(f))
-        probe_fields[f] = F.col("__p_" + f)
-
-    exploded = prepared.select(
-        F.col(probe_id_col).alias("__pid"),
-        "__ptokens",
-        "__pfull",
-        "__dob_provided",
-        "__pepoch",
-        "__pyear",
-        *["__p_" + f for f in OPTIONAL_MATCH_FIELDS],
-        F.explode("__ptokens").alias("__token"),
-    )
-    joined = exploded.join(token_index, "__token")
-
-    preds = _candidate_predicates(
-        F.col("__ptokens"),
-        F.col("__pfull"),
-        F.col("__dob_provided"),
-        F.col("__pepoch"),
-        F.col("__pyear"),
-        probe_fields,
-    )
-    verdict = F.struct(
-        F.lit(1).alias("matched"),
-        _e("source").alias("list"),
-        preds["matched_args"].alias("matched_args"),
-        preds["comment"].alias("comment"),
-    )
-    ranked = F.struct(
-        preds["tier"].alias("tier"),
-        _e("source").alias("source"),
-        _e("name").alias("name"),
-        _e("entry_id").alias("entry_id"),
-        verdict.alias("verdict"),
-    )
-    best = (
-        joined.filter(preds["candidate_ok"])
-        .groupBy("__pid")
-        .agg(F.min(ranked).alias("__best"))
-    )
-    out = probes.join(
-        best, probes[probe_id_col] == best["__pid"], "left"
-    ).withColumn(
-        "verdict", F.coalesce(F.col("__best.verdict"), _miss_verdict())
-    )
-    return out.drop("__pid", "__best")
+    return Matcher(entries).match(probes, probe_id_col)
 
 
 def _with_physical_row_key(

@@ -512,11 +512,15 @@ def decode_jpeg_gray(payload: bytes) -> tuple[int, int, np.ndarray]:
     # un-optimized c_einsum contracts all indices in one generic-stride
     # nested loop (~0.65 ms per image in the round-7 integrity profile,
     # the single hottest line of the whole suite); the matmul pair runs
-    # the same contraction ~10× faster. Summation order technically
-    # differs, but after round+clip the decoded pixels were verified
-    # bit-identical across every pinned fixture payload, 3000
-    # bench-style renders and 300 random size/quality images
-    # (tests/test_jpeg.py::test_idct_matmul_matches_einsum pins this).
+    # the same contraction ~10× faster. Summation order differs, so
+    # bit-identity after round+clip is EMPIRICAL for the BLAS in use,
+    # not algebraic: a sum landing exactly on a .5 rounding boundary
+    # could flip one pixel under another BLAS or platform. It was
+    # verified across every pinned fixture payload, 3000 bench-style
+    # renders and 300 random size/quality images, and
+    # tests/test_jpeg.py::test_idct_matmul_matches_einsum is the guard
+    # that catches a BLAS where it stops holding (the 40 dB integrity
+    # gate itself is insensitive to a ±1 single-pixel difference).
     spatial = _T.T @ d @ _T + 128.0
     pixels = (
         np.clip(np.round(spatial), 0, 255)

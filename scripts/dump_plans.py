@@ -7,7 +7,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -15,16 +16,24 @@ from perl_data_validate_sanctions_spark.checks.stats import column_stats  # noqa
 from perl_data_validate_sanctions_spark.checks.unique import (  # noqa: E402
     duplicate_keys,
 )
+from perl_data_validate_sanctions_spark.api import (  # noqa: E402
+    SanctionsValidator,
+)
 from perl_data_validate_sanctions_spark.operators.matcher import (  # noqa: E402
     match_captions,
+    match_probes,
 )
+from perl_data_validate_sanctions_spark.schema import PROBE_SCHEMA  # noqa: E402
 from perl_data_validate_sanctions_spark.session import get_spark  # noqa: E402
 from perl_data_validate_sanctions_spark.sources.synth import (  # noqa: E402
     synth_entries,
     synth_images,
 )
 
-OUT = "/root/repo/plans/PLANS.md"
+OUT = os.path.join(ROOT, "plans", "PLANS.md")
+# entry count of the reference's bundled dimension, which the
+# synthetic stand-in matches when the bundled YAML is absent
+FULL_DIM_ENTRIES = 15_664
 
 
 def fmt(df) -> str:
@@ -33,6 +42,18 @@ def fmt(df) -> str:
             "formatted"
         )
     )
+
+
+def jobs_of(df) -> int:
+    """Spark jobs that one ``collect()`` of ``df`` runs."""
+    sc = df.sparkSession.sparkContext
+    group = f"dump-plans-{id(df)}"
+    sc.setJobGroup(group, group)
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def main() -> None:
@@ -71,8 +92,8 @@ def main() -> None:
     write_ivf_index(emb, cents, ivf_path)
 
     # full bundled dimension (15,664 entries): the token index must
-    # still broadcast at real dimension size
-    full_dim_sections = {}
+    # still broadcast at real dimension size. Without the bundled YAML
+    # a synthetic dimension of the same entry count stands in.
     bundled_yml = "/root/reference/share/sanctions.yml"
     if os.path.exists(bundled_yml):
         from perl_data_validate_sanctions_spark.sources.yaml_io import (
@@ -80,14 +101,42 @@ def main() -> None:
         )
 
         full_entries, _ = load_yaml_dataset(spark, bundled_yml)
-        full_dim_sections[
-            "match_captions vs full bundled dimension "
-            "(15,664 entries — join must still broadcast)"
-        ] = match_captions(images, full_entries)
+        full_dim = "full bundled dimension"
+    else:
+        dim_path = f"/tmp/pdvs_plans_dim{FULL_DIM_ENTRIES}"
+        if not os.path.isdir(dim_path):
+            n_extra = FULL_DIM_ENTRIES - synth_entries(spark, 0).count()
+            synth_entries(spark, n_extra=n_extra).write.parquet(dim_path)
+        full_entries = spark.read.parquet(dim_path)
+        full_dim = "synthetic full-size dimension"
+
+    # one get_sanctioned_info probe: the API runs only Matcher.best on
+    # the dimension's cached matcher; match_probes on the same one-row
+    # probe is the bulk shape (probes ⟕ best) the API ran before
+    probe_args = dict(first_name="Zaki", last_name="Ahmad",
+                      date_of_birth="1999-01-05")
+    api_probe = SanctionsValidator(
+        spark, entries=full_entries
+    )._verdict_query(**probe_args)
+    row = dict.fromkeys(PROBE_SCHEMA.fieldNames())
+    row.update(probe_id="probe", **probe_args)
+    bulk_probe = match_probes(
+        spark.createDataFrame([tuple(row.values())], PROBE_SCHEMA),
+        full_entries,
+    ).select("verdict")
 
     sections = {
         "match_captions (J1-J2 hot path)": match_captions(images, entries),
-        **full_dim_sections,
+        f"match_captions vs {full_dim} "
+        f"({FULL_DIM_ENTRIES:,} entries — join must still broadcast)":
+            match_captions(images, full_entries),
+        f"get_sanctioned_info one-row probe vs {full_dim} "
+        f"({jobs_of(api_probe)} jobs: Matcher.best alone — the only "
+        "Exchange is the groupBy(__pid) over candidate rows; no "
+        "probe-table exchange, no broadcast of best)": api_probe,
+        f"match_probes over the same one-row probe "
+        f"({jobs_of(bulk_probe)} jobs: the bulk shape, which adds the "
+        "probes ⟕ best join back to the probe table)": bulk_probe,
         "duplicate_keys(phash) (salted two-phase)": duplicate_keys(
             images, "phash"
         ),

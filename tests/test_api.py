@@ -7,7 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from perl_data_validate_sanctions_spark.api import SanctionsValidator
-from perl_data_validate_sanctions_spark.sources.synth import synth_entries
+from perl_data_validate_sanctions_spark.operators.matcher import match_probes
+from perl_data_validate_sanctions_spark.schema import PROBE_SCHEMA
+from perl_data_validate_sanctions_spark.sources.synth import (
+    synth_entries,
+    synth_probes,
+)
 
 
 @pytest.fixture(scope="module")
@@ -31,6 +36,70 @@ def test_keyword_api_verdict_shape(validator):
         "matched_args": {"name": "Zaki Izzat Zaki AHMAD", "dob_year": 1999},
     }
     assert validator.get_sanctioned_info("nobody", "anywhere") == {"matched": 0}
+
+
+def _info(verdict) -> dict:
+    """A bulk verdict struct in get_sanctioned_info's sparse dict form."""
+    if not verdict["matched"]:
+        return {"matched": 0}
+    return {
+        "matched": 1,
+        "list": verdict["list"],
+        "comment": verdict["comment"],
+        "matched_args": {
+            k: v for k, v in verdict["matched_args"].asDict().items()
+            if v is not None
+        },
+    }
+
+
+def test_single_probe_matches_bulk(spark):
+    """Every golden probe through ONE validator, one call per probe,
+    forward then reversed (the dimension's matcher is built once and
+    reused), gets exactly its bulk match_probes verdict: epoch and year
+    tiers, the dob_text comment, all seven optional fields, a wrong
+    field, misses and noise."""
+    entries = synth_entries(spark, n_extra=50)
+    probes = synth_probes(spark)
+    bulk = {
+        r["probe_id"]: _info(r["verdict"])
+        for r in match_probes(probes, entries).collect()
+    }
+    v = SanctionsValidator(spark, entries=entries)
+    args = [f for f in PROBE_SCHEMA.fieldNames() if f != "probe_id"]
+    rows = probes.collect()
+    matchers = []
+    for r in rows + rows[::-1]:
+        got = v.get_sanctioned_info(**{f: r[f] for f in args})
+        assert got == bulk[r["probe_id"]], r["probe_id"]
+        matchers.append(v._probe_matcher())
+    assert all(m is matchers[0] for m in matchers)
+    assert {b["matched"] for b in bulk.values()} == {0, 1}
+
+
+def test_cached_matcher_follows_dimension_swaps(spark, tmp_path_factory):
+    """The cached matcher never answers from a replaced dimension: a
+    probe of an entry that update_data drops misses afterwards, and
+    matches again once a newer snapshot is published and reloaded on
+    its mtime advance."""
+    path = str(tmp_path_factory.mktemp("swap") / "entries.parquet")
+    base = synth_entries(spark, n_extra=5)
+    base.write.mode("overwrite").parquet(path)
+    v = SanctionsValidator(spark, sanction_path=path)
+    neverov = ("NEVEROV", "Sergei Ivanovich", -253411200)
+    assert v.get_sanctioned_info(*neverov)["list"] == "EU-Sanctions"
+
+    # the fetch drops Neverov (entry 0), so EU-Sanctions is replaced
+    fetched = base.filter(
+        (F.col("source") != "EU-Sanctions") | (F.col("entry_id") != 0)
+    )
+    v.update_data(fetched)
+    assert v.get_sanctioned_info(*neverov) == {"matched": 0}
+
+    # another writer publishes a snapshot that has him again
+    SanctionsValidator(spark, sanction_path=path)._publish_parquet(base, path)
+    v._last_load = 0  # past the throttle: the mtime advance reloads
+    assert v.get_sanctioned_info(*neverov)["list"] == "EU-Sanctions"
 
 
 def test_update_data_and_export(spark, tmp_path_factory):
@@ -139,6 +208,23 @@ def test_sanction_file_env_precedence(spark, tmp_path_factory, monkeypatch):
 
     v_explicit = SanctionsValidator(spark, sanction_path=explicit_path)
     assert v_explicit.data().count() == 3
+
+
+def test_explicit_entries_ignore_sanction_file_env(
+    spark, tmp_path_factory, monkeypatch
+):
+    """Entries passed in without a sanction_path are the dimension: an
+    existing $SANCTION_FILE must not replace them on the first query."""
+    env_path = str(tmp_path_factory.mktemp("envent") / "env.parquet")
+    synth_entries(spark, n_extra=0).limit(1).write.parquet(env_path)
+    monkeypatch.setenv("SANCTION_FILE", env_path)
+
+    v = SanctionsValidator(
+        spark, entries=synth_entries(spark, n_extra=0).limit(3)
+    )
+    assert v.sanction_path is None
+    assert v.data().count() == 3
+    assert v.is_sanctioned("atom", "test", "1999-01-05") == 1  # not in env
 
 
 def test_unstamped_update_preserves_epochs_and_content(spark, tmp_path_factory):
